@@ -7,7 +7,7 @@ One ``run_once()`` = one tick of the reference's 15s loop:
     end  = head - lag            (A2 confirmation lag; ref main.py:32)
     range = (cursor, end]        (A1; ref main.py:203-207)
     for each ≤batch_size chunk:  (A3; ref main.py:34-35)
-        decode → enrich → flatten/explode
+        fetch once → decode → enrich (persisted) → flatten/explode
         NDJSON staging + idempotent warehouse merge (A9/A10/A12-fix)
     cursor.set(end)              (A12; ref main.py:216)
 
@@ -15,6 +15,11 @@ Errors are contained per tick: an exception leaves the cursor unmoved so
 the next tick retries the same range (A13; ref main.py:217-220) — and
 because the sinks are idempotent merges, the retry cannot duplicate
 rows (the bug class of ref §3.1 is structurally gone).
+
+Each chunk's range is fetched once: the enriched frame is persisted
+before the sink actions (two staging writes; a count and a write per
+merge) and unpersisted when the chunk ends, so staging and warehouse
+land one fetch even if the provider would answer a re-fetch differently.
 """
 
 from __future__ import annotations
@@ -106,24 +111,27 @@ class EtlBatchRunner:
     def _process_range(self, lo: int, hi: int) -> None:
         raw = self.raw_logs_source(lo, hi)
         events = decode_events(raw)
-        enriched = enrich_with_docs(events, ipfs_docs=self.ipfs_docs)
-        listings = flatten_listings(enriched)
-        products = explode_products(enriched)
+        enriched = enrich_with_docs(events, ipfs_docs=self.ipfs_docs).persist()
+        try:
+            listings = flatten_listings(enriched)
+            products = explode_products(enriched)
 
-        # A9: NDJSON staging (observable contract of the reference)
-        write_ndjson_staging(listings, f"{self.staging_dir}/marketplace")
-        write_ndjson_staging(products, f"{self.staging_dir}/dshop")
+            # A9: NDJSON staging (observable contract of the reference)
+            write_ndjson_staging(listings, f"{self.staging_dir}/marketplace")
+            write_ndjson_staging(products, f"{self.staging_dir}/dshop")
 
-        # A10 + A12-fix: idempotent warehouse merges
-        self.stats.num_marketplace_rows += merge_append(
-            self.spark,
-            listings,
-            f"{self.warehouse_dir}/marketplace_listings",
-            keys=["block_number", "log_index"],
-        )
-        self.stats.num_dshop_rows += merge_append(
-            self.spark,
-            products,
-            f"{self.warehouse_dir}/dshop_products",
-            keys=["block_number", "log_index", "product_id"],
-        )
+            # A10 + A12-fix: idempotent warehouse merges
+            self.stats.num_marketplace_rows += merge_append(
+                self.spark,
+                listings,
+                f"{self.warehouse_dir}/marketplace_listings",
+                keys=["block_number", "log_index"],
+            )
+            self.stats.num_dshop_rows += merge_append(
+                self.spark,
+                products,
+                f"{self.warehouse_dir}/dshop_products",
+                keys=["block_number", "log_index", "product_id"],
+            )
+        finally:
+            enriched.unpersist(blocking=True)

@@ -11,8 +11,11 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 
 def write_ndjson_staging(df: DataFrame, path: str) -> None:
@@ -20,6 +23,17 @@ def write_ndjson_staging(df: DataFrame, path: str) -> None:
     of the reference (ref main.py:40-41, 153-154, SourceFormat
     NEWLINE_DELIMITED_JSON main.py:171)."""
     df.write.mode("overwrite").json(path)
+
+
+def _first_parquet_file(path: str) -> str | None:
+    """First data file of a parquet table, skipping the ``_``/``.``
+    entries Spark's listing skips (``_temporary``, ``.crc``)."""
+    for d, dirs, files in os.walk(path):
+        dirs[:] = sorted(x for x in dirs if not x.startswith(("_", ".")))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                return os.path.join(d, f)
+    return None
 
 
 def merge_append(
@@ -40,20 +54,32 @@ def merge_append(
     Partition-scale note: at 100 TB the target scan prunes to the
     batch's partition range when the table is partitioned by a key
     prefix (e.g. block_number bucket), keeping the probe O(batch).
-    Returns the number of rows appended.
+
+    The key types come from one existing file's footer, read with
+    pyarrow on the driver — the file Spark's own inference would read,
+    without the Spark job it runs for it. The anti join's result is
+    persisted, so the count and the append probe the target once; it is
+    unpersisted (blocking) before returning. Returns the number of rows
+    appended.
     """
-    if os.path.isdir(path) and any(
-        f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
-    ):
-        existing_keys = spark.read.parquet(path).select(*keys)
-        fresh = df.join(existing_keys, keys, "left_anti")
-    else:
-        fresh = df
-    # A11: empty-input short-circuit (ref main.py:162-165)
-    appended = fresh.count()
-    if appended:
-        fresh.write.mode("append").parquet(path)
-    return appended
+    fresh = df
+    first = _first_parquet_file(path)
+    if first is not None:
+        footer = pq.read_schema(first)
+        key_schema = T.StructType(
+            [T.StructField(k, from_arrow_type(footer.field(k).type)) for k in keys]
+        )
+        existing_keys = spark.read.schema(key_schema).parquet(path)
+        fresh = df.join(existing_keys, keys, "left_anti").persist()
+    try:
+        # A11: empty-input short-circuit (ref main.py:162-165)
+        appended = fresh.count()
+        if appended:
+            fresh.write.mode("append").parquet(path)
+        return appended
+    finally:
+        if fresh is not df:
+            fresh.unpersist(blocking=True)
 
 
 def observe_counts(df: DataFrame, name: str) -> DataFrame:

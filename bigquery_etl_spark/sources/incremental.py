@@ -2,12 +2,13 @@
 
 The reference splits [start, end] into ≤1000-block chunks fanned over 5
 worker threads doing JSON-RPC getLogs (ref main.py:34-38, 147-155).
-Spark form: ``spark.range(start, end+1)`` → one row per block →
-repartition to the desired fetch parallelism → ``mapInPandas`` calls a
-pluggable per-range fetcher once per Arrow batch. Fetch parallelism =
-number of partitions (the 5-worker pool generalized to the cluster), and
-the provider's 1000-block request cap becomes the batch chunking inside
-the fetcher call.
+Spark form: the driver splits the range into contiguous
+≤``max_blocks_per_call`` chunks and plans one row per chunk
+(``spark.range(n_chunks)``) over ``min(fetch_parallelism, n_chunks)``
+partitions; ``mapInPandas`` calls a pluggable per-range fetcher once per
+chunk row. Fetch parallelism = number of partitions (the 5-worker pool
+generalized to the cluster), the provider's 1000-block request cap is
+the chunk size, and no shuffle splits a chunk's blocks apart.
 """
 
 from __future__ import annotations
@@ -30,31 +31,23 @@ def block_range_source(
     fetch_parallelism: int = 5,  # ref main.py:38 JOB_MAX_WORKERS
     max_blocks_per_call: int = 1000,  # ref main.py:34-35 provider cap
 ) -> DataFrame:
-    """Fetch an event-log range as a DataFrame, distributed by block.
+    """Fetch an event-log range as a DataFrame, one task per chunk.
 
-    Each task receives a contiguous-ish set of block numbers, groups them
-    into runs of ≤max_blocks_per_call, and invokes the fetcher per run —
-    so RPC count is ceil(range/max_blocks), independent of parallelism."""
+    Chunk ``i`` covers ``[start + i*max, min(start + (i+1)*max - 1, end)]``,
+    so one evaluation makes ceil(range/max_blocks) fetcher calls,
+    independent of parallelism; ``end < start`` plans zero chunks and
+    yields an empty frame without calling the fetcher."""
     import pandas as pd
 
-    blocks = spark.range(start_block, end_block + 1).toDF("block_number")
-    blocks = blocks.repartition(fetch_parallelism)
+    n_chunks = max(0, end_block - start_block + max_blocks_per_call) // max_blocks_per_call
+    chunks = spark.range(0, n_chunks, 1, max(1, min(fetch_parallelism, n_chunks)))
+    columns = [f.name for f in schema.fields]
 
     def fetch(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
-            nums = sorted(int(b) for b in pdf["block_number"])
-            if not nums:
-                continue
-            runs: list[tuple[int, int]] = []
-            lo = prev = nums[0]
-            for n in nums[1:]:
-                if n != prev + 1 or n - lo + 1 > max_blocks_per_call:
-                    runs.append((lo, prev))
-                    lo = n
-                prev = n
-            runs.append((lo, prev))
-            for a, b in runs:
-                rows = fetcher(a, b)
-                yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+            for i in pdf["id"]:
+                lo = start_block + int(i) * max_blocks_per_call
+                rows = fetcher(lo, min(lo + max_blocks_per_call - 1, end_block))
+                yield pd.DataFrame(rows, columns=columns)
 
-    return blocks.mapInPandas(fetch, schema=schema)
+    return chunks.mapInPandas(fetch, schema=schema)

@@ -24,6 +24,7 @@ from bigquery_etl_spark.pipeline.fixtures import (
     make_raw_logs,
 )
 from bigquery_etl_spark.pipeline.runner import EtlBatchRunner
+from bigquery_etl_spark.pipeline.sinks import merge_append
 from bigquery_etl_spark.pipeline.schemas import (
     DSHOP_PRODUCTS_SCHEMA,
     MARKETPLACE_LISTINGS_SCHEMA,
@@ -131,6 +132,37 @@ def test_runner_idempotent_replay(spark, pipeline_inputs, tmp_path):
     mk = spark.read.parquet(str(tmp_path / "warehouse/marketplace_listings"))
     assert mk.count() == first_mk
     assert mk.select("block_number", "log_index").distinct().count() == first_mk
+
+
+def test_merge_append_probe(spark, tmp_path):
+    """The anti-join probe reads key types from a data file's footer
+    (never a hidden file), and leaves no cache of its own behind nor
+    drops the caller's."""
+    path = str(tmp_path / "t")
+    keys = ["block_number", "log_index"]
+    batch = spark.createDataFrame(
+        [(1, 0, "a"), (1, 1, "b"), (2, 0, "c")], "block_number long, log_index int, v string"
+    ).persist()
+    batch.count()  # materialize the caller's cache before taking the baseline
+    persisted = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())  # noqa: E731
+    before = persisted()
+    try:
+        assert merge_append(spark, batch, path, keys) == 3  # empty target: no probe
+        assert batch.is_cached
+        # hidden leftovers sort first but are skipped, as Spark's listing does
+        (tmp_path / "t" / ".part-00000-junk.parquet").write_bytes(b"not parquet")
+        assert merge_append(spark, batch, path, keys) == 0  # replay appends nothing
+        # checked before any append: an append to the path drops cached
+        # buffers of plans reading it, which would hide a leaked probe
+        assert persisted() == before
+        more = spark.createDataFrame([(2, 0, "c"), (3, 0, "d")], batch.schema)
+        assert merge_append(spark, more, path, keys) == 1
+        with pytest.raises(KeyError):
+            merge_append(spark, more, path, ["block_number", "no_such_key"])
+        assert persisted() == before
+        assert spark.read.parquet(path).count() == 4
+    finally:
+        batch.unpersist()
 
 
 def test_runner_error_containment(spark, pipeline_inputs, tmp_path):

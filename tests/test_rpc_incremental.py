@@ -58,29 +58,42 @@ def _runner(spark, tmp_path, rpc_url) -> EtlBatchRunner:
     )
 
 
+def _persisted_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def test_live_rpc_incremental_loop(spark, tmp_path, rpc_url):
     runner = _runner(spark, tmp_path, rpc_url)
+    persisted = _persisted_rdds(spark)
 
-    # Tick 1: head = START+23 → end = START+19 → 20 blocks, 2 chunks of ≤16.
+    # Tick 1: head = START+23 → end = START+19 → 20 blocks, chunks of 16
+    # and 4 blocks, fetched in ≤10-block calls: 2 + 1 getLogs.
     _RpcStub.head = START_BLOCK + 23
     assert runner.run_once() is True
     assert runner.cursor.get() == START_BLOCK + 19
     wh = spark.read.parquet(str(tmp_path / "wh" / "marketplace_listings"))
     assert wh.count() == 20 * 2  # foreign-contract events filtered out (A4)
-    assert _RpcStub.n_getlogs >= 2  # range actually fetched over HTTP
+    assert _RpcStub.n_getlogs == 3  # each range fetched once, over HTTP
+    assert _persisted_rdds(spark) == persisted
 
     # Tick 2: head unchanged → lag window empty → short-circuit, no work.
     before = _RpcStub.n_getlogs
     assert runner.run_once() is False
     assert _RpcStub.n_getlogs == before
 
-    # Tick 3: head advances 10 → exactly the 10 new blocks land, no dupes.
+    # Tick 3: head advances 10 → exactly the 10 new blocks land, no dupes,
+    # from one getLogs call.
     _RpcStub.head = START_BLOCK + 33
     assert runner.run_once() is True
+    assert _RpcStub.n_getlogs == before + 1
     assert runner.cursor.get() == START_BLOCK + 29
     wh = spark.read.parquet(str(tmp_path / "wh" / "marketplace_listings"))
     assert wh.count() == 30 * 2
     assert wh.select("block_number", "log_index").distinct().count() == 30 * 2
+    # one chunk: staging holds exactly the rows the warehouse gained
+    staged = spark.read.json(str(tmp_path / "stage" / "marketplace"))
+    assert staged.count() == wh.count() - 20 * 2
+    assert _persisted_rdds(spark) == persisted
 
 
 def test_live_rpc_error_containment(spark, tmp_path, rpc_url):
@@ -88,6 +101,7 @@ def test_live_rpc_error_containment(spark, tmp_path, rpc_url):
     next healthy tick processes the same range exactly once (A13 + the
     §3.1 at-least-once fix)."""
     runner = _runner(spark, tmp_path, rpc_url)
+    persisted = _persisted_rdds(spark)
     _RpcStub.head = START_BLOCK + 13
 
     _RpcStub.fail = True
@@ -95,8 +109,25 @@ def test_live_rpc_error_containment(spark, tmp_path, rpc_url):
     assert runner.stats.num_errors == 1
     assert runner.cursor.get() == START_BLOCK - 1  # unmoved
 
+    # head answers, then getLogs 500s inside the fetch tasks
+    head_fn = runner.head_fn
+
+    def head_then_fail() -> int:
+        head = head_fn()
+        _RpcStub.fail = True
+        return head
+
     _RpcStub.fail = False
+    runner.head_fn = head_then_fail
+    assert runner.run_once() is False
+    assert runner.stats.num_errors == 2
+    assert runner.cursor.get() == START_BLOCK - 1  # unmoved
+    assert _persisted_rdds(spark) == persisted
+
+    _RpcStub.fail = False
+    runner.head_fn = head_fn
     assert runner.run_once() is True
     assert runner.cursor.get() == START_BLOCK + 9
     wh = spark.read.parquet(str(tmp_path / "wh" / "marketplace_listings"))
     assert wh.count() == 10 * 2
+    assert _persisted_rdds(spark) == persisted

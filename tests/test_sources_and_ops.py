@@ -3,6 +3,7 @@ bucketized range joins, and multimodal operators."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -49,16 +50,17 @@ def test_partitioned_write_prunes(spark, tmp_path):
     assert "PartitionFilters" in plan
 
 
-def test_block_range_source_chunks_and_rows(spark):
-    calls: list[tuple[int, int]] = []
+def _stamping_fetcher():
+    """A fetcher that stamps the call producing each row into ``address``:
+    calls run in Python workers, so the rows are the driver's only record
+    of them. Built per test, so cloudpickle ships it by value."""
 
-    def fetcher(lo: int, hi: int) -> list[dict]:
-        calls.append((lo, hi))
+    def fetch(lo: int, hi: int) -> list[dict]:
         return [
             {
                 "block_number": b,
                 "log_index": 0,
-                "address": "0x_origin_marketplace",
+                "address": f"{lo}-{hi}",
                 "event_name": "ListingCreated",
                 "listing_id": f"l-{b}",
                 "ipfs_hash": f"Qm{b}",
@@ -66,14 +68,50 @@ def test_block_range_source_chunks_and_rows(spark):
             for b in range(lo, hi + 1)
         ]
 
+    return fetch
+
+
+def _calls(rows) -> list[tuple[int, int]]:
+    """Fetcher calls of one evaluation; each call lands its blocks once."""
+    per_call: dict[tuple[int, int], list[int]] = {}
+    for r in rows:
+        lo, hi = map(int, r.address.split("-"))
+        per_call.setdefault((lo, hi), []).append(r.block_number)
+    for (lo, hi), blocks in per_call.items():
+        assert sorted(blocks) == list(range(lo, hi + 1)), (lo, hi)
+    return sorted(per_call)
+
+
+def test_block_range_source_chunks_and_rows(spark):
     df = block_range_source(
-        spark, 100, 199, fetcher, RAW_LOGS_SCHEMA, fetch_parallelism=4, max_blocks_per_call=30
+        spark, 100, 199, _stamping_fetcher(), RAW_LOGS_SCHEMA,
+        fetch_parallelism=4, max_blocks_per_call=30,
     )
     rows = df.collect()
     assert len(rows) == 100
     assert sorted(r.block_number for r in rows) == list(range(100, 200))
-    # provider cap respected in every call
-    assert all(hi - lo + 1 <= 30 for lo, hi in calls)
+    # contiguous chunks of the provider cap, one call each
+    assert _calls(rows) == [(100, 129), (130, 159), (160, 189), (190, 199)]
+
+
+@pytest.mark.parametrize(
+    "start, end, parallelism, cap, calls, partitions",
+    [
+        (7, 7, 5, 30, [(7, 7)], 1),  # one block
+        (10, 39, 5, 30, [(10, 39)], 1),  # exactly the cap
+        (50, 49, 5, 30, [], 0),  # end < start: nothing to fetch
+        (0, 69, 16, 30, [(0, 29), (30, 59), (60, 69)], 3),  # more tasks than chunks
+    ],
+)
+def test_block_range_source_edges(spark, start, end, parallelism, cap, calls, partitions):
+    df = block_range_source(
+        spark, start, end, _stamping_fetcher(), RAW_LOGS_SCHEMA,
+        fetch_parallelism=parallelism, max_blocks_per_call=cap,
+    )
+    assert df.rdd.getNumPartitions() == partitions
+    rows = df.collect()
+    assert sorted(r.block_number for r in rows) == list(range(start, end + 1))
+    assert _calls(rows) == calls
 
 
 def test_point_in_interval_join_matches_nested_loop(spark):
